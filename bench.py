@@ -25,8 +25,9 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 
-def _steal_jiffies() -> int:
-    """Cumulative hypervisor steal time (jiffies) from /proc/stat.
+def _steal_jiffies() -> int | None:
+    """Cumulative hypervisor steal time (jiffies) from /proc/stat, or
+    None when it cannot be read.
 
     loadavg cannot see a noisy *neighbor* VM: this host shows bursts of
     20-65% steal under full 32-core load while its own loadavg looks
@@ -39,7 +40,7 @@ def _steal_jiffies() -> int:
             parts = fh.readline().split()
         return int(parts[8])  # cpu  user nice sys idle iowait irq sirq steal
     except (OSError, IndexError, ValueError):
-        return -1
+        return None
 
 
 def main() -> None:
@@ -88,7 +89,7 @@ def main() -> None:
         samples: list[float] = []
         loads: list[float] = []
         jobs: list[int] = []
-        steals: list[int] = []
+        steals: list[int | None] = []
         # one untimed warmup first: the initial run pays JVM JIT +
         # whole-stage-codegen compilation (r3 spreads showed trial-1
         # dominating, e.g. q1 4.8s vs 1.29s min); warming keeps the
@@ -105,7 +106,8 @@ def main() -> None:
             df = q.fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - t0
-            steals.append(_steal_jiffies() - st0)
+            st1 = _steal_jiffies()
+            steals.append(None if st0 is None or st1 is None else st1 - st0)
             sc.setLocalProperty("spark.jobGroup.id", None)
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(tag)))
             if trial > 0:
@@ -122,9 +124,10 @@ def main() -> None:
             "trials": [round(s, 3) for s in samples],
             "loadavg": loads,
             "jobs": jobs,
-            # hypervisor steal jiffies per trial (10 ms units, whole VM):
-            # a trial with steal comparable to elapsed*cpus was starved
-            # by a neighbor VM, not slowed by the code
+            # hypervisor steal jiffies per trial (10 ms units, whole VM;
+            # null where /proc/stat was unreadable): a trial with steal
+            # comparable to elapsed*cpus was starved by a neighbor VM,
+            # not slowed by the code
             "steal_jiffies": steals,
         }
         # steady-state job-count check: memoized-fit rows (sim_topk_pq,

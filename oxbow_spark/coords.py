@@ -26,6 +26,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -216,6 +217,31 @@ def alignment_record_passes(
             continue
         return True
     return False
+
+
+def alignment_records_mask(
+    entries: tuple, ref_names: list[str], ref_id: np.ndarray,
+    pos1: np.ndarray, pos_valid: np.ndarray,
+    end1: np.ndarray, end_valid: np.ndarray,
+) -> np.ndarray:
+    """:func:`alignment_record_passes` over whole columns: record i has
+    rname ``ref_names[ref_id[i]]`` (None when ``ref_id[i] < 0``), pos1
+    ``pos1[i]`` where ``pos_valid[i]`` and end1 ``end1[i]`` where
+    ``end_valid[i]`` (else None). Same union, ``"*"``, open-end and
+    end-falls-back-to-pos rules; returns the boolean keep mask."""
+    out = np.zeros(len(ref_id), dtype=bool)
+    rec_end = np.where(end_valid, end1, pos1)
+    for e in entries:
+        if e[0] == "*":
+            out |= ref_id < 0
+            continue
+        nm, s0, e0 = e
+        hit = np.isin(ref_id, [i for i, r in enumerate(ref_names) if r == nm])
+        hit &= pos_valid & (rec_end > s0)
+        if e0 is not None:
+            hit &= pos1 - 1 < e0
+        out |= hit
+    return out
 
 
 # ----------------------------------------------------------------- Spark side

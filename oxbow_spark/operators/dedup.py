@@ -398,26 +398,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_pairs(
-    df: DataFrame, pairs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    shingle_k: int = 3, _sh: DataFrame | None = None,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for given candidate pairs.
-
-    Joins shingle arrays to the (small) candidate pair set, then computes
-    |A ∩ B| / |A ∪ B| with array intrinsics — no UDF, no explode.
-    """
-    sh = _sh if _sh is not None else shingle_stage(df, text_col, id_col, shingle_k)
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
-    )
-
-
 def _exceeds_one_split(df: DataFrame) -> bool:
     """Catalyst size estimate for ``df`` exceeds one scan split — the
     shared input-size-derived flip (`text._input_exceeds_one_split`;

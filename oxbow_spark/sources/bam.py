@@ -22,6 +22,7 @@ partition, default 16 MiB).
 
 from __future__ import annotations
 
+import bisect
 import os
 import struct
 from dataclasses import dataclass
@@ -69,7 +70,7 @@ DEFAULT_CHUNKSIZE = 16 * 1024 * 1024
 # int32 Arrow offset range (2 GiB) even for ultra-long reads
 MAX_BATCH_BYTES = 256 * 1024 * 1024
 
-# ---- vectorized decode tables (see _decode_columns) ----------------------
+# ---- vectorized decode tables (see decode_record_batch) ------------------
 # 4-bit seq codes expand through byte-indexed lookup: one table per nibble.
 _SEQ_HI = np.frombuffer(
     bytes(ord(SEQ_CODES[b >> 4]) for b in range(256)), dtype=np.uint8
@@ -83,31 +84,52 @@ _FIXED_DTYPE = np.dtype([
     ("bin", "<u2"), ("n_cigar", "<u2"), ("flag", "<u2"), ("l_seq", "<i4"),
     ("next_ref", "<i4"), ("next_pos", "<i4"), ("tlen", "<i4"),
 ])
-_CIGAR_CHARS = np.array(list(CIGAR_OPS))
 _REF_CONSUME = np.array([c in "MDN=X" for c in CIGAR_OPS] + [False] * 7)
+# cigar rendering: op chars by code, and the place values of the 9 decimal
+# digits an op length can need (op_len < 2**28 = 268435456)
+_CIGAR_OP_BYTES = np.frombuffer(CIGAR_OPS.encode(), dtype=np.uint8)
+_POW10 = 10 ** np.arange(8, -1, -1, dtype=np.int32)
+# the framer inflates at least this many bytes at a time, so a window
+# refill is not paid per 64 KiB block
+_MIN_REFILL = 1 << 20
+
+
+class BamRecordError(ValueError):
+    """A BAM record whose fields do not fit in its ``block_size``.
+    ``offset`` is the byte offset of the record body in the buffer it was
+    decoded from; ``BamReader.read`` re-raises it with the record's
+    virtual file offset."""
+
+    def __init__(self, msg: str, offset: int):
+        super().__init__(msg)
+        self.offset = offset
 
 
 def _gather_ranges(arr: np.ndarray, offs: np.ndarray, lens: np.ndarray):
-    """Concatenate arr[offs[i]:offs[i]+lens[i]] for all i — one fancy-index
-    gather. Returns (gathered, out_starts) with out_starts[i] the start of
-    record i's slice in the gathered array.
+    """Concatenate arr[offs[i]:offs[i]+lens[i]] for all i, for a uint8
+    ``arr`` and non-empty ranges in order that do not overlap (empty ones
+    may point anywhere). Returns (gathered, out_starts) with out_starts[i]
+    the start of range i in the gathered array.
 
-    The index vector is built with a single cumsum over a mostly-ones
-    delta array (jump-corrected at range boundaries) — ~3x faster than
-    the textbook repeat+arange construction at BAM batch sizes."""
+    Arrow copies the bytes: the ranges and the gaps between them are the
+    values of one binary array over ``arr``, and taking every other value
+    is one memcpy per range — about 7x faster than building a per-byte
+    index vector for a numpy gather."""
     total = int(lens.sum())
     out_starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
     if total == 0:
         return arr[:0], out_starts
     nz = lens > 0
-    o, l = offs[nz], lens[nz]
-    b = np.concatenate(([0], np.cumsum(l)))[:-1]
-    delta = np.ones(total, dtype=np.int64)
-    delta[0] = o[0]
-    if len(o) > 1:
-        delta[b[1:]] = o[1:] - (o[:-1] + l[:-1]) + 1
-    idx = np.cumsum(delta)
-    return arr[idx], out_starts
+    bounds = np.empty(2 * int(nz.sum()), dtype=np.int64)
+    bounds[0::2] = offs[nz]
+    bounds[1::2] = offs[nz] + lens[nz]
+    if (bounds[1:] < bounds[:-1]).any():
+        raise ValueError("_gather_ranges: ranges overlap or are out of order")
+    values = pa.Array.from_buffers(
+        pa.large_binary(), len(bounds) - 1,
+        [None, pa.py_buffer(bounds), pa.py_buffer(arr)])
+    taken = values.take(pa.array(np.arange(0, len(bounds), 2)))
+    return np.frombuffer(taken.buffers()[2], dtype=np.uint8, count=total), out_starts
 
 
 def read_bam_header(r: BgzfReader) -> tuple[SamHeader, list[str], int]:
@@ -254,6 +276,30 @@ def _utf8_array(lengths: np.ndarray, data: np.ndarray, null_mask=None) -> pa.Arr
     )
 
 
+def _cigar_column(ops_b, op_byte_start, n_cig) -> pa.Array:
+    """CIGAR strings of records whose ``n_cig[i]`` op words start at byte
+    ``op_byte_start[i]`` of ``ops_b``, rendered in numpy: each op's
+    decimal length is right-aligned in a row of an (ops x 10) byte matrix
+    with its op char in the last column; masking every row to its width
+    and reading row-major gives the value bytes, and add.reduceat over
+    the widths gives each record's length. Null where ``n_cig == 0``."""
+    words, byte_first = _gather_ranges(ops_b, op_byte_start, 4 * n_cig)
+    ops = words.view("<u4")
+    ln = (ops >> 4).astype(np.int32)
+    code = ops & 0xF
+    op_first = byte_first // 4
+    width = 2 + (ln[:, None] >= _POW10[:-1]).sum(axis=1)  # digits + op char
+    text = np.empty((len(ln), 10), dtype=np.uint8)
+    text[:, :9] = ln[:, None] // _POW10 % 10 + 48
+    text[:, 9] = _CIGAR_OP_BYTES[code]
+    data = text[np.arange(10) >= (10 - width)[:, None]]
+    lengths = np.zeros(len(n_cig), dtype=np.int64)
+    nz = n_cig > 0
+    if nz.any():
+        lengths[nz] = np.add.reduceat(width, op_first[nz])
+    return _utf8_array(lengths, data, ~nz)
+
+
 def decode_record_batch(
     big: bytes,
     starts: np.ndarray,
@@ -273,10 +319,13 @@ def decode_record_batch(
     record/base: the 32-byte fixed prefixes are gathered into an (n, 32)
     matrix and viewed as a structured dtype; seq nibbles expand through two
     256-entry lookup tables; quals are one vectorized +33; cigar op words
-    decode in one shot with reference-consumed lengths via add.reduceat.
+    decode in one shot with reference-consumed lengths via add.reduceat,
+    and render as text through a digit matrix (``_cigar_column``); the
+    region residual is one mask (``coords.alignment_records_mask``).
     Column work is gated on the projection: an unselected seq/qual/cigar
     is never decoded (reference scan-time projection, SURVEY P2), and with
     ``regions`` only surviving records get their string columns built.
+    A record whose fields overrun its ``lens`` raises ``BamRecordError``.
 
     ``max_rows`` < 0 means no limit. Returns (batch | None, rows_kept).
     """
@@ -298,6 +347,14 @@ def decode_record_batch(
     qual_off = seq_off + nseq
     tag_off = qual_off + l_seq
     rec_end = starts + lens
+    bad = np.flatnonzero((l_rn == 0) | (l_seq < 0) | (tag_off > rec_end))
+    if len(bad):
+        i = bad[0]
+        raise BamRecordError(
+            f"malformed BAM record: read name, cigar, seq and qual need "
+            f"{tag_off[i] - starts[i]} bytes but block_size is {lens[i]} "
+            f"(l_read_name={l_rn[i]}, n_cigar={n_cig[i]}, l_seq={l_seq[i]})",
+            int(starts[i]))
 
     sel = set(names)
     need_end = "end" in sel or regions is not None
@@ -308,10 +365,9 @@ def decode_record_batch(
     pos1 = pos0 + 1
 
     reflen = np.zeros(n, dtype=np.int64)
-    op_len = op_code = op_pos = None
     if need_cigar:
         ops_b, op_byte_starts = _gather_ranges(arr, cig_off, 4 * n_cig)
-        ops = np.ascontiguousarray(ops_b).view("<u4").astype(np.int64)
+        ops = ops_b.view("<u4").astype(np.int64)
         op_len = ops >> 4
         op_code = ops & 0xF
         op_pos = op_byte_starts // 4
@@ -323,14 +379,8 @@ def decode_record_batch(
     end_valid = pos_valid & (reflen > 0)
 
     if regions is not None:
-        keep_list = []
-        for i in range(n):
-            rn = ref_names[ref_id[i]] if has_ref[i] else None
-            p = int(pos1[i]) if pos_valid[i] else None
-            e = int(end1[i]) if end_valid[i] else None
-            if _coords.alignment_record_passes(regions, rn, p, e):
-                keep_list.append(i)
-        keep = np.array(keep_list, dtype=np.int64)
+        keep = np.flatnonzero(_coords.alignment_records_mask(
+            regions, ref_names, ref_id, pos1, pos_valid, end1, end_valid))
     else:
         keep = np.arange(n)
     if max_rows >= 0:
@@ -367,12 +417,7 @@ def decode_record_batch(
             mq = f["mapq"][keep].astype(np.int16)
             cols.append(_masked_int(mq, mq != 255, fld.type))
         elif nm == "cigar":
-            parts = np.char.add(op_len.astype("U10"), _CIGAR_CHARS[op_code])
-            cig = [
-                "".join(parts[op_pos[i]:op_pos[i] + n_cig[i]]) if n_cig[i] else None
-                for i in keep
-            ]
-            cols.append(pa.array(cig, type=fld.type))
+            cols.append(_cigar_column(ops_b, op_byte_starts[keep], n_cig[keep]))
         elif nm == "rnext":
             nref = f["next_ref"].astype(np.int64)
             cols.append(pa.array(_name_col(nref, nref >= 0)[keep], type=fld.type))
@@ -508,69 +553,149 @@ class BamReader(DataSourceReader):
         return parts or [BamPartition(self.paths[0], 0, 0)]
 
     # -- execution --------------------------------------------------------
-    def _emit(self, rows):
-        cols = list(zip(*rows)) if rows else [[] for _ in self._arrow_schema]
-        arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, self._arrow_schema)]
-        return pa.RecordBatch.from_arrays(arrays, schema=self._arrow_schema)
-
     def read(self, part: BamPartition):
         with BgzfReader(part.path) as r:
-            hdr, ref_names, first_vpos = read_bam_header(r)
-            r.seek_virtual(max(part.vstart, first_vpos))
+            _hdr, ref_names, first_vpos = read_bam_header(r)
+            window = _RecordWindow(r, max(part.vstart, first_vpos), part.vend)
             emitted = 0
-            bufs: list[bytes] = []
-
-            def flush():
-                nonlocal bufs, emitted
-                if not bufs:
-                    return None
-                big = b"".join(bufs)
-                lens = np.fromiter(
-                    (len(b) for b in bufs), dtype=np.int64, count=len(bufs)
-                )
-                starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
+            while True:
+                cap = max(1, self.batch_size)
+                if self.limit >= 0 and part.regions is None:
+                    # without a region filter the kept-row count equals the
+                    # framed count, so a limit can stop framing early
+                    cap = max(1, min(cap, self.limit - emitted))
                 remaining = self.limit - emitted if self.limit >= 0 else -1
-                batch, got = decode_record_batch(
-                    big, starts, lens, ref_names, self.names, self.tag_defs,
-                    self.coord_offset, part.regions, remaining,
-                    self._arrow_schema,
-                )
-                bufs = []
-                emitted += got
-                return batch
-
-            # without a region filter the kept-row count equals the framed
-            # count, so a limit can stop framing early
-            def frame_cap() -> int:
-                if self.limit < 0 or part.regions is not None:
-                    return self.batch_size
-                return max(1, min(self.batch_size, self.limit - emitted))
-
-            bytes_acc = 0
-            while r.tell_virtual() < part.vend:
-                szb = r.read(4)
-                if len(szb) < 4:
-                    break
-                (block_size,) = struct.unpack("<i", szb)
-                buf = r.read(block_size)
-                if len(buf) < block_size:
-                    break
-                bufs.append(buf)
-                bytes_acc += block_size
-                # flush on bytes as well as record count: a batch_size
-                # batch of long reads (nanopore) could otherwise push a
-                # utf8 column past the int32 Arrow offset range (seq
-                # expands ~2x from packed nibbles)
-                if len(bufs) >= frame_cap() or bytes_acc >= MAX_BATCH_BYTES:
-                    batch = flush()
-                    if batch is not None:
-                        yield batch
-                    bytes_acc = 0
-                    if 0 <= self.limit <= emitted:
+                try:
+                    # batches end on bytes as well as record count: a
+                    # batch_size batch of long reads (nanopore) could
+                    # otherwise push a utf8 column past the int32 Arrow
+                    # offset range (seq expands ~2x from packed nibbles)
+                    buf, starts, lens = window.frame(cap, MAX_BATCH_BYTES)
+                    if not len(starts):
                         return
-            batch = flush()
-            if batch is not None:
-                yield batch
+                    batch, got = decode_record_batch(
+                        buf, starts, lens, ref_names, self.names,
+                        self.tag_defs, self.coord_offset, part.regions,
+                        remaining, self._arrow_schema,
+                    )
+                except BamRecordError as e:
+                    raise BamRecordError(
+                        f"{part.path}: record at virtual offset "
+                        f"{window.vpos(e.offset - 4)}: {e}", e.offset) from None
+                emitted += got
+                if batch is not None:
+                    yield batch
+                if 0 <= self.limit <= emitted:
+                    return
+
+
+class _RecordWindow:
+    """Frames BAM records straight from inflated BGZF blocks.
+
+    ``buf`` holds consecutive inflated blocks; ``frame`` returns record
+    bodies as (start, length) offsets into it, so a batch is decoded
+    without copying records out. A record belongs to the range iff its
+    start virtual position is below ``vend``, where a record that starts
+    at the end of a block starts at the next block (as
+    ``BgzfReader.tell_virtual`` counts it). A record cut off by the end
+    of the file is dropped."""
+
+    def __init__(self, r: BgzfReader, vstart: int, vend: int):
+        self.r = r
+        self.vend = vend
+        self.buf = b""
+        self.bases: list[int] = []  # offset in buf where each block starts
+        self.coffs: list[int] = []  # ... and that block's file offset
+        self.next_coffset = vstart >> 16
+        self.stop = None  # offset in buf where record starts reach vend
+        self.eof = False
+        self._refill(0, 1)
+        self.pos = min(vstart & 0xFFFF, len(self.buf))
+
+    def frame(self, cap: int, max_bytes: int):
+        """The next batch: (buf, starts, lens) of up to ``cap`` records,
+        ending early after the record that brings the body bytes to
+        ``max_bytes``; no records once the range is exhausted."""
+        heads: list[int] = []  # offset of each record's block_size field
+        nbytes = 0
+        buf, pos = self.buf, self.pos
+        unpack = struct.unpack_from
+        while len(heads) < cap and nbytes < max_bytes:
+            n = len(buf)
+            lim = n - 3 if self.stop is None else min(n - 3, self.stop)
+            for _ in range(cap - len(heads)):
+                if pos >= lim:
+                    break
+                (size,) = unpack("<i", buf, pos)
+                if size < 32:
+                    raise BamRecordError(
+                        f"malformed BAM record: block_size {size} is shorter "
+                        "than the 32-byte fixed fields", pos + 4)
+                end = pos + 4 + size
+                if end > n:
+                    break
+                heads.append(pos)
+                pos = end
+                nbytes += size
+                if nbytes >= max_bytes:
+                    break
+            else:
+                break  # cap reached
+            if (nbytes >= max_bytes or self.eof
+                    or (self.stop is not None and pos >= self.stop)):
+                break
+            # the record at pos runs past the window: drop the bytes before
+            # this batch and read on
+            need = 4 + unpack("<i", buf, pos)[0] if pos + 4 <= n else 4
+            first = heads[0] if heads else pos
+            self._refill(first, pos - first + need)
+            buf = self.buf
+            pos -= first
+            if first and heads:
+                heads = [h - first for h in heads]
+        self.pos = pos
+        starts = np.array(heads, dtype=np.int64) + 4
+        lens = np.diff(starts, append=pos + 4) - 4
+        return buf, starts, lens
+
+    def _refill(self, first: int, need: int) -> None:
+        """Drop the window bytes before ``first``, then inflate blocks
+        until ``need`` bytes follow it. While the range end is not in
+        sight, read on to twice the bytes kept (at least ``_MIN_REFILL``),
+        so a batch that spans many refills is copied a bounded number of
+        times."""
+        kept = memoryview(self.buf)[first:]
+        while len(self.bases) > 1 and self.bases[1] <= first:
+            del self.bases[0], self.coffs[0]
+        self.bases = [b - first for b in self.bases]
+        if self.stop is not None:
+            self.stop -= first
+        parts = [kept]
+        have = len(kept)
+        want = max(need, 2 * have, _MIN_REFILL)
+        while have < need or (self.stop is None and have < want):
+            c = self.next_coffset
+            data, nxt = self.r.block_at(c)
+            if not data:
+                self.eof = True
+                break
+            if self.stop is None:
+                v0 = c << 16
+                if v0 >= self.vend:
+                    self.stop = have
+                elif c == self.vend >> 16 or nxt << 16 >= self.vend:
+                    self.stop = have + min(self.vend - v0, len(data))
+            self.bases.append(have)
+            self.coffs.append(c)
+            parts.append(data)
+            have += len(data)
+            self.next_coffset = nxt
+        self.buf = b"".join(parts)
+
+    def vpos(self, offset: int) -> int:
+        """Virtual file offset of ``buf[offset]``."""
+        j = bisect.bisect_right(self.bases, offset) - 1
+        return self.coffs[j] << 16 | (offset - self.bases[j])
 
 
 class PushdownBamReader(BamReader):

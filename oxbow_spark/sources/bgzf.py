@@ -78,6 +78,15 @@ class BgzfReader:
         self._block_coffset = coffset
         self._next_coffset = coffset + bsize
 
+    def block_at(self, coffset: int) -> tuple[bytes, int]:
+        """Inflated bytes of the block at ``coffset`` and the offset of the
+        block after it — the step for callers that frame records from whole
+        blocks. The bytes are b"" at end of file (or at an empty block,
+        which ``read`` also treats as the end)."""
+        if coffset != self._block_coffset:
+            self._load_block(coffset)
+        return self._block_data, self._next_coffset
+
     def seek_virtual(self, vpos: int) -> None:
         coffset, uoffset = vpos >> 16, vpos & 0xFFFF
         if coffset != self._block_coffset:

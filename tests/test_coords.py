@@ -126,3 +126,43 @@ def test_coalesce_chunks():
     assert coalesce_chunks([(10, 20), (15, 30), (40, 50)]) == [(10, 30), (40, 50)]
     assert coalesce_chunks([(40, 50), (10, 20), (20, 30)]) == [(10, 30), (40, 50)]
     assert coalesce_chunks([]) == []
+
+
+# ------------------------------------- numpy residual mask vs scalar check
+
+from hypothesis import given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+_NAMES = ["chr1", "chr2", "chrX"]
+# small coordinates, so records often start or end right at a region edge
+_coord = st.integers(0, 12)
+_entry = st.one_of(
+    st.just(("*",)),
+    st.tuples(st.sampled_from(_NAMES + ["chrZ"]), _coord, st.none() | _coord),
+)
+_record = st.tuples(
+    st.integers(-1, len(_NAMES) - 1),  # ref_id, -1 = no rname
+    st.none() | st.integers(1, 12),    # pos1
+    st.none() | st.integers(1, 16),    # end1
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_entry, max_size=4).map(tuple), st.lists(_record, max_size=30))
+def test_alignment_records_mask_equals_scalar(entries, records):
+    import numpy as np
+
+    from oxbow_spark.coords import alignment_record_passes, alignment_records_mask
+
+    ref_id = np.array([r for r, _, _ in records], dtype=np.int64)
+    pos1 = np.array([p or 0 for _, p, _ in records], dtype=np.int64)
+    end1 = np.array([e or 0 for _, _, e in records], dtype=np.int64)
+    pos_valid = np.array([p is not None for _, p, _ in records], dtype=bool)
+    end_valid = np.array([e is not None for _, _, e in records], dtype=bool)
+    got = alignment_records_mask(
+        entries, _NAMES, ref_id, pos1, pos_valid, end1, end_valid)
+    want = [
+        alignment_record_passes(entries, _NAMES[r] if r >= 0 else None, p, e)
+        for r, p, e in records
+    ]
+    assert got.tolist() == want
